@@ -76,17 +76,6 @@ def check_materialized_rows(n_rows: int, cap: int, handler: str) -> None:
         )
 
 
-def _spark_supports_arrow_ingest() -> bool:
-    """Spark >= 4: createDataFrame accepts pyarrow Tables and
-    DataFrame.toArrow exists."""
-    import pyspark
-
-    try:
-        return int(pyspark.__version__.split(".", 1)[0]) >= 4
-    except ValueError:  # pragma: no cover - exotic version strings
-        return hasattr(DataFrame, "toArrow")
-
-
 class SparkTypeHandler:
     """Abstract handler (reference U1, handler.py:123-137)."""
 
@@ -158,26 +147,16 @@ class ArrowTypeHandler(SparkTypeHandler):
         if isinstance(obj, pa.RecordBatchReader):
             obj = obj.read_all()
         # Spark 4 ingests pyarrow Tables directly (Arrow IPC, no pandas
-        # detour); the version check — not a broad except TypeError —
-        # decides the fallback, so a GENUINE ingestion TypeError (e.g.
-        # an unsupported Arrow extension column) surfaces instead of
-        # being silently rerouted through pandas with different type
-        # semantics
-        if _spark_supports_arrow_ingest():
-            return spark.createDataFrame(obj)
-        return spark.createDataFrame(obj.to_pandas())  # pragma: no cover
+        # detour)
+        return spark.createDataFrame(obj)
 
     def from_spark(self, df: DataFrame, target_type: Type) -> Any:
         import pyarrow as pa
 
         bounded, cap = bounded_frame(df, self.materialize_cap_rows)
-        # df.toArrow() (Spark 4) collects over Arrow IPC — no
-        # pandas round-trip and exact arrow types
-        table = (
-            bounded.toArrow()
-            if hasattr(bounded, "toArrow")
-            else pa.Table.from_pandas(bounded.toPandas())
-        )
+        # df.toArrow() collects over Arrow IPC — no pandas round-trip
+        # and exact arrow types
+        table = bounded.toArrow()
         check_materialized_rows(table.num_rows, cap, "arrow")
         if target_type is pa.RecordBatchReader:
             return pa.RecordBatchReader.from_batches(
@@ -209,25 +188,18 @@ class PolarsTypeHandler(SparkTypeHandler):
 
         if isinstance(obj, pl.LazyFrame):
             obj = obj.collect()
-        # Arrow both ways on Spark 4: the pandas detour loses type
-        # fidelity (Int64-with-nulls -> float64 NaN, precision loss on
-        # large ints) and copies every row twice
-        if _spark_supports_arrow_ingest():
-            return spark.createDataFrame(obj.to_arrow())
-        return spark.createDataFrame(obj.to_pandas())  # pragma: no cover
+        # Arrow both ways: a pandas detour would lose type fidelity
+        # (Int64-with-nulls -> float64 NaN, precision loss on large
+        # ints) and copy every row twice
+        return spark.createDataFrame(obj.to_arrow())
 
     def from_spark(self, df: DataFrame, target_type: Type) -> Any:
         import polars as pl
 
         bounded, cap = bounded_frame(df, self.materialize_cap_rows)
-        if _spark_supports_arrow_ingest():
-            tbl = bounded.toArrow()
-            check_materialized_rows(tbl.num_rows, cap, "polars")
-            out = pl.from_arrow(tbl)
-        else:  # pragma: no cover - Spark < 4
-            pdf = bounded.toPandas()
-            check_materialized_rows(len(pdf), cap, "polars")
-            out = pl.from_pandas(pdf)
+        tbl = bounded.toArrow()
+        check_materialized_rows(tbl.num_rows, cap, "polars")
+        out = pl.from_arrow(tbl)
         if target_type is pl.LazyFrame:
             return out.lazy()
         return out

@@ -24,6 +24,7 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+import dataclasses
 import hashlib
 import json
 import os
@@ -34,7 +35,7 @@ import uuid
 from datetime import date, datetime, timedelta
 from functools import lru_cache
 from decimal import Decimal
-from typing import Any, Optional, Sequence
+from typing import Any, Callable, Optional, Sequence, Union
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -76,6 +77,60 @@ HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 _STATS_MAX_STRING = 256
 _COMMIT_RETRIES = 5
 _COMMIT_BACKOFF_BASE = 0.2  # reference uses 4s REST backoff; local commits are fast
+
+
+@dataclasses.dataclass
+class _Commit:
+    """What one attempt of :meth:`DeltaSparkTable._commit` publishes,
+    built by the caller's plan against that attempt's head snapshot.
+    ``metadata`` is a new metaData action (None keeps the head's);
+    ``txns`` are SetTransaction ``appId -> version`` entries, set
+    directly in the ledger (a copy_into FORCE reload records a file's
+    new mtime even when it moved backwards; idempotent_append only
+    commits a batch above the recorded one);
+    ``result`` is the caller's return value, to which the committed
+    ``version`` is added; ``auto_compact`` runs the post-commit
+    ``dds.autoCompact`` hook."""
+
+    operation: str
+    parameters: dict[str, Any] = dataclasses.field(default_factory=dict)
+    metrics: dict[str, Any] = dataclasses.field(default_factory=dict)
+    user_metadata: Optional[dict[str, str]] = None
+    removes: Sequence[AddFile] = ()
+    adds: Sequence[AddFile] = ()
+    metadata: Optional[Metadata] = None
+    txns: dict[str, int] = dataclasses.field(default_factory=dict)
+    result: dict[str, Any] = dataclasses.field(default_factory=dict)
+    auto_compact: bool = False
+
+
+def _check_identity_marks(
+    assumed: dict[str, Optional[str]], cur: Optional[Snapshot], what: str
+) -> None:
+    """A concurrent writer that advanced an identity high-water mark
+    invalidates this commit's allocation: the staged ids would
+    duplicate the winner's.  Refuse (rerun re-allocates against the
+    fresh mark) — never mint duplicate ids."""
+    for ikey, iassumed in assumed.items():
+        fresh_mark = cur.metadata.configuration.get(ikey) if cur else None
+        if fresh_mark != iassumed:
+            raise ConcurrentAppendError(
+                f"identity mark {ikey} advanced concurrently "
+                f"({iassumed} -> {fresh_mark}); rerun the {what} to "
+                "re-allocate ids"
+            )
+
+
+def _head_snapshot(table_uri: str) -> Optional[Snapshot]:
+    """The head snapshot, or None when no table exists yet.  One log
+    listing (load_snapshot's own) instead of a latest_version probe
+    followed by the load."""
+    try:
+        return tablelog.load_snapshot(table_uri)
+    except TableNotFoundError:
+        if tablelog.latest_version(table_uri) >= 0:
+            raise  # commits without a metaData action: corrupt, not absent
+        return None
 
 
 class TableExistsError(Exception):
@@ -1612,8 +1667,6 @@ class DeltaSparkTable:
         carry the full union mask), read back from the untouched data
         files — the exact row-level DELETE/preimage feed.  Cost ∝ the
         masked files' rows, never the table."""
-        import dataclasses
-
         fk = self.spark.createDataFrame(
             [(os.path.abspath(a.base or self.table_uri), a.path)
              for a in re_adds],
@@ -1852,15 +1905,12 @@ class DeltaSparkTable:
         staging so per-file min/max stats are tight on those columns
         (write-time layout optimization; see also optimize(cluster_by)).
         """
-        head = tablelog.latest_version(self.table_uri)
-        exists = head >= 0
-
-        if mode == WriteMode.error and exists:
+        snap = _head_snapshot(self.table_uri)
+        if mode == WriteMode.error and snap is not None:
             raise TableExistsError(f"table already exists at {self.table_uri}")
-        if mode == WriteMode.ignore and exists:
-            return {"mode": "ignore", "version": head, "skipped": True}
+        if mode == WriteMode.ignore and snap is not None:
+            return {"mode": "ignore", "version": snap.version, "skipped": True}
 
-        snap = tablelog.load_snapshot(self.table_uri) if exists else None
         if snap is not None:
             # writer-protocol gate BEFORE the distributed staging job
             # (the pre-staging-validation rule): a future-writer table
@@ -2021,36 +2071,20 @@ class DeltaSparkTable:
                                 bloom_spec=_bloom_columns(merged_cfg))
         rows_written = sum(a.num_records for a in adds)
 
-        for attempt in range(_COMMIT_RETRIES + 1):
-            head = tablelog.latest_version(self.table_uri)
-            exists = head >= 0
-            if mode == WriteMode.error and exists:
+        def plan(cur: Optional[Snapshot]) -> Union[_Commit, dict[str, Any]]:
+            if mode == WriteMode.error and cur is not None:
                 raise TableExistsError(f"table already exists at {self.table_uri}")
-            if mode == WriteMode.ignore and exists:
-                return {"mode": "ignore", "version": head, "skipped": True}
-            snap = tablelog.load_snapshot(self.table_uri) if exists else None
-
-            # a concurrent writer that advanced an identity high-water
-            # mark invalidates this write's allocation: the staged ids
-            # would duplicate the winner's.  Refuse (rerun re-allocates
-            # against the fresh mark) — never mint duplicate ids.
-            for ikey, iassumed in identity_assumed.items():
-                fresh_mark = (snap.metadata.configuration.get(ikey)
-                              if snap else None)
-                if fresh_mark != iassumed:
-                    raise ConcurrentAppendError(
-                        f"identity mark {ikey} advanced concurrently "
-                        f"({iassumed} -> {fresh_mark}); rerun the write "
-                        "to re-allocate ids"
-                    )
+            if mode == WriteMode.ignore and cur is not None:
+                return {"mode": "ignore", "version": cur.version, "skipped": True}
+            _check_identity_marks(identity_assumed, cur, "write")
 
             # copy_into file-ledger guard: a racing COPY INTO that
             # loaded one of this write's source files between discovery
             # and commit would make the file land twice — refuse, the
             # rerun's discovery pass skips it (exactly-once per file)
             for ckey, expected in (_copy_txns_expected or {}).items():
-                fresh_rec = (snap.app_versions.get(ckey)
-                             if snap else None)
+                fresh_rec = (cur.app_versions.get(ckey)
+                             if cur else None)
                 if fresh_rec != expected:
                     raise ConcurrentAppendError(
                         f"copy_into source file ledger entry {ckey} "
@@ -2059,13 +2093,13 @@ class DeltaSparkTable:
                     )
 
             removes: list[AddFile] = []
-            if mode == WriteMode.overwrite and snap is not None:
+            if mode == WriteMode.overwrite and cur is not None:
                 # re-checked against the FRESH head (the colmap/
                 # identity-mark convention): a concurrent
                 # SET dds.appendOnly=true must not race an in-flight
                 # overwrite past the freeze
                 _refuse_append_only(
-                    self.table_uri, snap.metadata.configuration,
+                    self.table_uri, cur.metadata.configuration,
                     "overwrite")
                 if partition_dnf:
                     # scoped overwrite may only reference real partition
@@ -2077,17 +2111,17 @@ class DeltaSparkTable:
                     bad = [
                         name
                         for name, _op, _v in partition_dnf
-                        if name not in snap.partition_columns
+                        if name not in cur.partition_columns
                     ]
                     if bad:
                         raise ValueError(
                             f"overwrite partition_dnf references non-partition "
                             f"column(s) {sorted(set(bad))}; table is partitioned "
-                            f"by {list(snap.partition_columns)}"
+                            f"by {list(cur.partition_columns)}"
                         )
-                    removes = self.pruned_files(snap, partition_dnf)
+                    removes = self.pruned_files(cur, partition_dnf)
                 else:
-                    removes = list(snap.files)
+                    removes = list(cur.files)
 
             # re-merge against the FRESH table schema: a concurrent
             # commit may have evolved it while this writer staged, and
@@ -2096,13 +2130,13 @@ class DeltaSparkTable:
             # stay live but every read would project without them).
             # A full schema-replacing overwrite skips this by design.
             committed_schema = final_schema
-            if snap is not None and not (
+            if cur is not None and not (
                 mode == WriteMode.overwrite
                 and schema_mode == SchemaMode.overwrite
                 and partition_dnf is None
             ):
                 committed_schema = _merge_schemas(
-                    StructType.fromJson(_json_loads(snap.schema_json)),
+                    StructType.fromJson(_json_loads(cur.schema_json)),
                     final_schema,
                 )
             # column mapping re-validates against the FRESH
@@ -2114,7 +2148,7 @@ class DeltaSparkTable:
             # parquet files exist under those names); only conflicts
             # raise.
             fresh_cfg = dict(
-                (snap.metadata.configuration if snap else {}),
+                (cur.metadata.configuration if cur else {}),
                 **(table_configuration or {}),
             )
             fresh_base = _column_mapping(fresh_cfg)
@@ -2159,81 +2193,26 @@ class DeltaSparkTable:
                     **fresh_colmap_updates,
                     **identity_updates,
                 ),
-                table_id=snap.metadata.table_id if snap else "",
-                created_time=snap.metadata.created_time if snap else 0,
+                table_id=cur.metadata.table_id if cur else "",
+                created_time=cur.metadata.created_time if cur else 0,
             )
             op_params: dict[str, Any] = {"mode": mode.value}
             if partition_dnf:
                 op_params["predicate"] = dnf_to_sql(partition_dnf)
             if pcols:
                 op_params["partitionBy"] = pcols
-            actions: list[dict[str, Any]] = [
-                CommitInfo(
-                    operation=f"WRITE {mode.value}",
-                    operation_parameters=op_params,
-                    operation_metrics={
-                        "num_output_rows": rows_written,
-                        "num_added_files": len(adds),
-                        "num_removed_files": len(removes),
-                    },
-                    user_metadata=commit_metadata,
-                ).to_action(),
-                meta.to_action(),
-            ]
-            actions += [a.to_action() for a in adds]
-            if _copy_txns:
-                actions += [
-                    {"txn": {"appId": k, "version": v}}
-                    for k, v in sorted(_copy_txns.items())
-                ]
-            now = int(time.time() * 1000)
-            actions += [r.remove_action(now) for r in removes]
-            new_files = {a.log_key: a for a in (snap.files if snap else [])}
-            for r in removes:
-                new_files.pop(r.log_key, None)
-            for a in adds:
-                new_files[a.log_key] = a
-            app_versions = dict(snap.app_versions) if snap else {}
-            # copy_into ledger entries set directly (not max-folded):
-            # a FORCE reload records the file's new mtime even when it
-            # moved backwards
-            app_versions.update(_copy_txns or {})
-            new_version = head + 1
-            try:
-                tablelog.commit(
-                    self.table_uri,
-                    new_version,
-                    actions,
-                    # carry the txn ledger forward: a checkpoint
-                    # written at this version must not wipe streaming
-                    # exactly-once state (same rule for every commit
-                    # path below)
-                    Snapshot(new_version, meta, list(new_files.values()),
-                             now,
-                             app_versions=app_versions,
-                             protocol=snap.protocol
-                             if snap else tablelog.Protocol()),
-                )
-                res = {
-                    "mode": mode.value,
-                    "version": new_version,
-                    "num_output_rows": rows_written,
-                    "num_added_files": len(adds),
-                    "num_removed_files": len(removes),
-                }
-                ac = self._maybe_auto_compact(meta.configuration)
-                if ac:
-                    res["auto_compacted_files"] = ac.get(
-                        "rewritten_files", 0)
-                    res["auto_compact_version"] = ac.get("version")
-                return res
-            except VersionConflictError:
-                if attempt >= _COMMIT_RETRIES:
-                    raise
-                # exponential backoff + jitter (reference O5 shape,
-                # ddp lakefs handler:23-61)
-                time.sleep(_COMMIT_BACKOFF_BASE * (2**attempt) + _jitter())
-        raise AssertionError("unreachable")
+            metrics = {
+                "num_output_rows": rows_written,
+                "num_added_files": len(adds),
+                "num_removed_files": len(removes),
+            }
+            return _Commit(
+                f"WRITE {mode.value}", op_params, metrics, commit_metadata,
+                removes=removes, adds=adds, metadata=meta,
+                txns=dict(_copy_txns or {}),
+                result={"mode": mode.value, **metrics}, auto_compact=True)
+
+        return self._commit(plan, creates=True)
 
     def _create_or_replace(
         self,
@@ -2251,40 +2230,19 @@ class DeltaSparkTable:
             partition_columns=list(pcols),
             configuration=dict(table_configuration or {}),
         )
-        for attempt in range(_COMMIT_RETRIES + 1):
-            head = tablelog.latest_version(self.table_uri)
-            snap = tablelog.load_snapshot(self.table_uri) if head >= 0 else None
-            if snap is not None:
+
+        def plan(cur: Optional[Snapshot]) -> _Commit:
+            if cur is not None:
                 _refuse_append_only(
-                    self.table_uri, snap.metadata.configuration,
+                    self.table_uri, cur.metadata.configuration,
                     "create_or_replace")
-            now = int(time.time() * 1000)
-            actions: list[dict[str, Any]] = [
-                CommitInfo(
-                    operation="CREATE OR REPLACE",
-                    operation_parameters={"partitionBy": list(pcols)},
-                    user_metadata=commit_metadata,
-                ).to_action(),
-                meta.to_action(),
-            ]
-            if snap:
-                actions += [a.remove_action(now) for a in snap.files]
-            v = head + 1
-            try:
-                tablelog.commit(
-                    self.table_uri, v, actions,
-                    Snapshot(v, meta, [], now,
-                             app_versions=dict(snap.app_versions)
-                             if snap else {},
-                             protocol=snap.protocol
-                             if snap else tablelog.Protocol()))
-                return {"mode": "create_or_replace", "version": v,
-                        "num_output_rows": 0}
-            except VersionConflictError:
-                if attempt >= _COMMIT_RETRIES:
-                    raise
-                time.sleep(_COMMIT_BACKOFF_BASE * (2**attempt) + _jitter())
-        raise AssertionError("unreachable")
+            return _Commit(
+                "CREATE OR REPLACE", {"partitionBy": list(pcols)},
+                user_metadata=commit_metadata,
+                removes=cur.files if cur else (), metadata=meta,
+                result={"mode": "create_or_replace", "num_output_rows": 0})
+
+        return self._commit(plan, creates=True)
 
     # -- MERGE (M1-M6, W6) ------------------------------------------------------
 
@@ -2707,11 +2665,13 @@ class DeltaSparkTable:
                 bloom_spec=_bloom_columns(snap.metadata.configuration),
             )
 
-        rows_written = sum(a.num_records for a in adds)
-        now = int(time.time() * 1000)
-        for attempt in range(_COMMIT_RETRIES + 1):
-            head = tablelog.latest_version(self.table_uri)
-            cur = tablelog.load_snapshot(self.table_uri)
+        metrics = {
+            "num_output_rows": sum(a.num_records for a in adds),
+            "num_added_files": len(adds),
+            "num_removed_files": len(removes),
+        }
+
+        def plan(cur: Snapshot) -> _Commit:
             if merge_config.merge_type != MergeType.deduplicate_insert:
                 # re-checked per retry (the colmap convention): a
                 # concurrent SET dds.appendOnly=true must not race a
@@ -2719,7 +2679,7 @@ class DeltaSparkTable:
                 _refuse_append_only(
                     self.table_uri, cur.metadata.configuration,
                     f"merge({merge_config.merge_type.value})")
-            if head != snap.version:
+            if cur.version != snap.version:
                 # write-conflict check: the merge was planned against
                 # ``snap``; if a concurrent commit removed any file this
                 # merge rewrites, committing would resurrect/lose rows
@@ -2747,7 +2707,7 @@ class DeltaSparkTable:
                 # that races the engine's own maintenance would be an
                 # unrecoverable failure for a no-op interleaving.
                 fresh = []
-                for v in range(snap.version + 1, head + 1):
+                for v in range(snap.version + 1, cur.version + 1):
                     operation = ""
                     adds_v: list[AddFile] = []
                     for action in tablelog.read_version_actions(
@@ -2800,81 +2760,19 @@ class DeltaSparkTable:
                             "snapshot may contain matching keys; re-run the "
                             "merge against the new table state"
                         )
-            # identity conflict check — same contract as write(): a
-            # concurrent writer that advanced the mark invalidates
-            # this merge's insert allocation
-            for ikey, iassumed in merge_id_assumed.items():
-                fresh_mark = cur.metadata.configuration.get(ikey)
-                if fresh_mark != iassumed:
-                    raise ConcurrentAppendError(
-                        f"identity mark {ikey} advanced concurrently "
-                        f"({iassumed} -> {fresh_mark}); rerun the "
-                        "merge to re-allocate ids"
-                    )
+            _check_identity_marks(merge_id_assumed, cur, "merge")
             new_meta = snap.metadata if evolved else cur.metadata
             if merge_id_updates:
-                new_meta = Metadata(
-                    schema_json=new_meta.schema_json,
-                    partition_columns=new_meta.partition_columns,
-                    configuration=dict(new_meta.configuration,
-                                       **merge_id_updates),
-                    table_id=new_meta.table_id,
-                    created_time=new_meta.created_time,
-                )
-            actions: list[dict[str, Any]] = [
-                CommitInfo(
-                    operation="MERGE",
-                    operation_parameters={
-                        "predicate": pred,
-                        "mergeType": mtype.value,
-                    },
-                    operation_metrics={
-                        "num_output_rows": rows_written,
-                        "num_added_files": len(adds),
-                        "num_removed_files": len(removes),
-                    },
-                    user_metadata=commit_metadata,
-                ).to_action(),
-            ]
-            if evolved or merge_id_updates:
-                actions.append(new_meta.to_action())
-            # removes BEFORE adds: log replay applies actions in order,
-            # so a rewrite that re-adds a removed log_key (deletion
-            # vectors re-add the same data file with a new DV) must not
-            # have its add popped by its own remove
-            actions += [r.remove_action(now) for r in removes]
-            actions += [a.to_action() for a in adds]
-            new_files = {a.log_key: a for a in cur.files}
-            for r in removes:
-                new_files.pop(r.log_key, None)
-            for a in adds:
-                new_files[a.log_key] = a
-            v = head + 1
-            try:
-                tablelog.commit(
-                    self.table_uri, v, actions,
-                    Snapshot(v, new_meta, list(new_files.values()), now,
-                             app_versions=dict(cur.app_versions),
-                             protocol=cur.protocol),
-                )
-                res = {
-                    "mode": "merge",
-                    "version": v,
-                    "num_output_rows": rows_written,
-                    "num_added_files": len(adds),
-                    "num_removed_files": len(removes),
-                }
-                ac = self._maybe_auto_compact(new_meta.configuration)
-                if ac:
-                    res["auto_compacted_files"] = ac.get(
-                        "rewritten_files", 0)
-                    res["auto_compact_version"] = ac.get("version")
-                return res
-            except VersionConflictError:
-                if attempt >= _COMMIT_RETRIES:
-                    raise
-                time.sleep(_COMMIT_BACKOFF_BASE * (2**attempt) + _jitter())
-        raise AssertionError("unreachable")
+                new_meta = dataclasses.replace(
+                    new_meta, configuration=dict(new_meta.configuration,
+                                                 **merge_id_updates))
+            return _Commit(
+                "MERGE", {"predicate": pred, "mergeType": mtype.value},
+                metrics, commit_metadata, removes=removes, adds=adds,
+                metadata=new_meta if evolved or merge_id_updates else None,
+                result={"mode": "merge", **metrics}, auto_compact=True)
+
+        return self._commit(plan)
 
     # -- stats (O3/A1/A2/J1) ----------------------------------------------------
 
@@ -3327,8 +3225,6 @@ class DeltaSparkTable:
         (from ``_dml_discovery_positions``) — skips the second scan of
         the candidate files; rows belonging to non-partial files fall
         out in the mapping join below."""
-        import dataclasses
-
         rel = os.path.join("_dv", f"dv-{uuid.uuid4().hex}")
         out_dir = os.path.join(self.table_uri, rel)
         # sidecar identity is (root, path) — clone-stable, see
@@ -3678,8 +3574,7 @@ class DeltaSparkTable:
         the same batch cannot double-append.  Creates the table on the
         first batch; schema must match exactly afterwards (a streaming
         sink is not the place for silent evolution)."""
-        exists = self.exists()
-        snap = self.snapshot() if exists else None
+        snap = _head_snapshot(self.table_uri)
         if snap is not None:
             # writer-protocol gate BEFORE staging (the pre-staging-
             # validation rule every other data-writing path follows):
@@ -3751,89 +3646,36 @@ class DeltaSparkTable:
             bloom_spec=_bloom_columns(meta.configuration),
         )
         rows = sum(a.num_records for a in adds)
-        now = int(time.time() * 1000)
-        for attempt in range(_COMMIT_RETRIES + 1):
-            head = tablelog.latest_version(self.table_uri)
-            cur = tablelog.load_snapshot(self.table_uri) if head >= 0 else None
+
+        def plan(cur: Optional[Snapshot]) -> Union[_Commit, dict[str, Any]]:
             if (cur is not None
                     and cur.app_versions.get(app_id, -1) >= batch_version):
                 # a racing worker committed this batch first; the staged
                 # files are unreferenced and vacuum will collect them
                 return {"version": cur.version, "skipped": True,
                         "num_output_rows": 0}
-            # identity conflict check — same contract as write()
-            for ikey, iassumed in identity_assumed.items():
-                fresh_mark = (cur.metadata.configuration.get(ikey)
-                              if cur else None)
-                if fresh_mark != iassumed:
-                    raise ConcurrentAppendError(
-                        f"identity mark {ikey} advanced concurrently "
-                        f"({iassumed} -> {fresh_mark}); rerun the batch "
-                        "to re-allocate ids"
-                    )
-            commit_meta = meta if cur is None else cur.metadata
-            if identity_updates and cur is not None:
-                commit_meta = Metadata(
-                    schema_json=commit_meta.schema_json,
-                    partition_columns=list(commit_meta.partition_columns),
-                    configuration={**commit_meta.configuration,
-                                   **identity_updates},
-                    table_id=commit_meta.table_id,
-                    created_time=commit_meta.created_time,
-                )
-            actions: list[dict[str, Any]] = [
-                CommitInfo(
-                    operation="STREAMING UPDATE",
-                    operation_parameters={
-                        "appId": app_id, "epochId": batch_version},
-                    operation_metrics={
-                        "num_output_rows": rows,
-                        "num_added_files": len(adds),
-                    },
-                ).to_action(),
-            ]
+            _check_identity_marks(identity_assumed, cur, "batch")
+            commit_meta = None
             if cur is None:
-                actions.append(meta.to_action())
+                commit_meta = meta
             elif identity_updates:
-                actions.append(commit_meta.to_action())
-            actions.append(
-                {"txn": {"appId": app_id, "version": batch_version}})
-            actions += [a.to_action() for a in adds]
-            new_files = {a.log_key: a for a in (cur.files if cur else [])}
-            for a in adds:
-                new_files[a.log_key] = a
-            app_versions = dict(cur.app_versions) if cur else {}
-            app_versions[app_id] = max(
-                app_versions.get(app_id, -1), batch_version)
-            v = head + 1
-            try:
-                tablelog.commit(
-                    self.table_uri, v, actions,
-                    Snapshot(v, commit_meta,
-                             list(new_files.values()), now,
-                             app_versions=app_versions,
-                             protocol=cur.protocol
-                             if cur else tablelog.Protocol()),
-                )
-                res = {"version": v, "skipped": False,
-                       "num_output_rows": rows,
-                       "num_added_files": len(adds)}
-                # autoCompact: the streaming exactly-once sink is
-                # precisely where the small-file treadmill lives —
-                # the follow-up OPTIMIZE is its own commit (a
-                # compaction, so the change feed skips it) and a lost
-                # race never fails the batch that already committed
-                ac = self._maybe_auto_compact(commit_meta.configuration)
-                if ac:
-                    res["auto_compacted_files"] = ac.get(
-                        "rewritten_files", 0)
-                    res["auto_compact_version"] = ac.get("version")
-                return res
-            except VersionConflictError:
-                if attempt >= _COMMIT_RETRIES:
-                    raise
-                time.sleep(_COMMIT_BACKOFF_BASE * (2**attempt) + _jitter())
-        raise AssertionError("unreachable")
+                commit_meta = dataclasses.replace(
+                    cur.metadata, configuration={**cur.metadata.configuration,
+                                                 **identity_updates})
+            metrics = {"num_output_rows": rows, "num_added_files": len(adds)}
+            # autoCompact: the streaming exactly-once sink is precisely
+            # where the small-file treadmill lives — the follow-up
+            # OPTIMIZE is its own commit (a compaction, so the change
+            # feed skips it) and a lost race never fails the batch that
+            # already committed
+            return _Commit(
+                "STREAMING UPDATE",
+                {"appId": app_id, "epochId": batch_version}, metrics,
+                adds=adds, metadata=commit_meta,
+                txns={app_id: batch_version},
+                result={"skipped": False, **metrics}, auto_compact=True)
+
+        return self._commit(plan, creates=True)
 
     # -- COPY INTO (file-level exactly-once batch ingest) --------------------
 
@@ -4082,8 +3924,6 @@ class DeltaSparkTable:
             raise ValueError(f"constraint {name!r} already exists")
         self._enforce_constraints(
             self._read_files(snap, snap.files), {key: expr})
-        import dataclasses
-
         return self._commit_rewrite(
             snap, [], [], "ADD CONSTRAINT",
             operation_parameters={"name": name, "expr": expr},
@@ -4102,7 +3942,6 @@ class DeltaSparkTable:
             if raise_if_missing:
                 raise ValueError(f"constraint {name!r} does not exist")
             return {"version": snap.version}
-        import dataclasses
 
         def build(cur: Snapshot) -> Metadata:
             cfg = dict(cur.metadata.configuration)
@@ -4124,8 +3963,6 @@ class DeltaSparkTable:
         previously-DROPPED name gets a fresh physical via the column
         mapping (no resurrection of buried values)."""
         from pyspark.sql.types import _parse_datatype_string
-
-        import dataclasses
 
         def build(cur: Snapshot) -> Metadata:
             schema = StructType.fromJson(_json_loads(cur.schema_json))
@@ -4216,8 +4053,6 @@ class DeltaSparkTable:
                     f"{_CDC_RETAIN_KEY} must be a non-negative integer "
                     f"(versions of CDC history vacuum must retain), got "
                     f"{properties[_CDC_RETAIN_KEY]!r}")
-        import dataclasses
-
         return self._commit_rewrite(
             snap, [], [], "SET TBLPROPERTIES",
             operation_parameters={"properties": json.dumps(properties)},
@@ -4247,7 +4082,6 @@ class DeltaSparkTable:
         if missing and raise_if_missing:
             raise ValueError(f"propert{'y' if len(missing)==1 else 'ies'} "
                              f"{missing} not set")
-        import dataclasses
 
         def build(cur: Snapshot) -> Metadata:
             fresh = dict(cur.metadata.configuration)
@@ -4373,8 +4207,6 @@ class DeltaSparkTable:
         carry physicals), clone, DVs (positional), and concurrent
         writers (they stage against physicals no rename can move).
         Partition and constraint-referenced columns refuse."""
-        import dataclasses
-
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", new):
             raise ValueError(f"invalid column name {new!r}")
 
@@ -4422,7 +4254,6 @@ class DeltaSparkTable:
         and reads null for pre-drop files instead of silently
         resurrecting the dropped values (Delta's column-mapping drop
         semantics)."""
-        import dataclasses
 
         def build(s: Snapshot) -> Metadata:
             schema = StructType.fromJson(_json_loads(s.schema_json))
@@ -4509,8 +4340,6 @@ class DeltaSparkTable:
         if target.exists():
             raise TableExistsError(
                 f"table already exists at {target_uri}")
-        import dataclasses
-
         src_root = os.path.abspath(self.table_uri)
         now = int(time.time() * 1000)
         adds = [
@@ -4716,10 +4545,11 @@ class DeltaSparkTable:
         extra_metrics: Optional[dict[str, Any]] = None,
         metadata: Optional[Any] = None,
     ) -> dict[str, Any]:
-        """Commit a compaction/clustering rewrite.
+        """Commit a file rewrite (DML, compaction, restore, FSCK) or a
+        metadata change through :meth:`_commit`.
 
         The post-commit file set is derived from the CURRENT head
-        snapshot (re-read inside the retry loop), not the snapshot the
+        snapshot (re-read on every attempt), not the snapshot the
         rewrite planned against — a concurrent append between planning
         and commit must survive in the published snapshot.  If any file
         this rewrite replaces was itself removed concurrently, the
@@ -4729,11 +4559,14 @@ class DeltaSparkTable:
         commits (rename/drop column, constraints, properties) rebuild
         their change against the retry's head instead of clobbering
         whatever a concurrent writer evolved in between."""
-        now = int(time.time() * 1000)
         remove_paths = {r.log_key for r in removes}
-        for attempt in range(_COMMIT_RETRIES + 1):
-            head = tablelog.latest_version(self.table_uri)
-            cur = tablelog.load_snapshot(self.table_uri)
+        metrics = {
+            "num_added_files": len(adds),
+            "num_removed_files": len(removes),
+            **(extra_metrics or {}),
+        }
+
+        def plan(cur: Snapshot) -> _Commit:
             if operation in _APPEND_ONLY_FORBIDDEN_OPS:
                 # re-checked per retry against the fresh head: a
                 # concurrent SET dds.appendOnly=true must not race an
@@ -4749,47 +4582,85 @@ class DeltaSparkTable:
                     f"replaces were removed concurrently "
                     f"(e.g. {sorted(missing)[0]})"
                 )
-            metrics = {
-                "num_added_files": len(adds),
-                "num_removed_files": len(removes),
-                **(extra_metrics or {}),
-            }
+            return _Commit(
+                operation, operation_parameters or {}, metrics,
+                removes=removes, adds=adds,
+                metadata=metadata(cur) if callable(metadata) else metadata,
+                result={"rewritten_files": len(removes), **metrics})
+
+        return self._commit(plan)
+
+    def _commit(
+        self,
+        plan: Callable[[Optional[Snapshot]], Union[_Commit, dict[str, Any]]],
+        *,
+        creates: bool = False,
+    ) -> dict[str, Any]:
+        """The optimistic commit loop every table mutation goes through
+        (Delta's ``OptimisticTransaction.commit``): each attempt reads
+        the head once, calls ``plan`` with it — the caller's conflict
+        checks against that head, returning the :class:`_Commit` to
+        publish, or a result dict when there is nothing to commit —
+        then races ``tablelog.commit`` for the next version, backing
+        off and rebasing on a lost race.  ``creates`` lets ``plan`` see
+        ``None`` for a table that does not exist yet; otherwise a
+        missing table raises.
+
+        One ``now`` per attempt stamps the commitInfo, the removes'
+        deletionTimestamp and the cached snapshot, so a cached and a
+        replayed snapshot agree on the commit time."""
+        for attempt in range(_COMMIT_RETRIES + 1):
+            cur = _head_snapshot(self.table_uri)
+            if cur is None and not creates:
+                raise TableNotFoundError(f"no table at {self.table_uri}")
+            c = plan(cur)
+            if isinstance(c, dict):
+                return c
+            now = int(time.time() * 1000)
+            meta = c.metadata or cur.metadata
             actions: list[dict[str, Any]] = [
-                CommitInfo(
-                    operation=operation,
-                    operation_parameters=operation_parameters or {},
-                    operation_metrics=metrics,
-                ).to_action(),
+                CommitInfo(c.operation, c.parameters, c.metrics,
+                           c.user_metadata, timestamp=now).to_action(),
             ]
-            meta = (metadata(cur) if callable(metadata)
-                    else (metadata or cur.metadata))
-            if metadata is not None:
-                actions.append(meta.to_action())
+            if c.metadata is not None:
+                actions.append(c.metadata.to_action())
+            actions += [{"txn": {"appId": k, "version": v}}
+                        for k, v in sorted(c.txns.items())]
             # removes BEFORE adds: log replay applies actions in order,
             # so a rewrite that re-adds a removed log_key (deletion
             # vectors re-add the same data file with a new DV) must not
             # have its add popped by its own remove
-            actions += [r.remove_action(now) for r in removes]
-            actions += [a.to_action() for a in adds]
-            new_files = {a.log_key: a for a in cur.files}
-            for r in removes:
+            actions += [r.remove_action(now) for r in c.removes]
+            actions += [a.to_action() for a in c.adds]
+            new_files = {a.log_key: a for a in (cur.files if cur else [])}
+            for r in c.removes:
                 new_files.pop(r.log_key, None)
-            for a in adds:
+            for a in c.adds:
                 new_files[a.log_key] = a
-            v = head + 1
+            # carry the txn ledger forward: a checkpoint written at this
+            # version must not wipe streaming exactly-once state
+            app_versions = dict(cur.app_versions) if cur else {}
+            app_versions.update(c.txns)
+            version = cur.version + 1 if cur else 0
             try:
                 tablelog.commit(
-                    self.table_uri, v, actions,
-                    Snapshot(v, meta, list(new_files.values()), now,
-                             app_versions=dict(cur.app_versions),
-                             protocol=cur.protocol),
+                    self.table_uri, version, actions,
+                    Snapshot(version, meta, list(new_files.values()), now,
+                             app_versions=app_versions,
+                             protocol=cur.protocol if cur
+                             else tablelog.Protocol()),
                 )
-                return {"rewritten_files": len(removes), "version": v,
-                        **metrics}
             except VersionConflictError:
                 if attempt >= _COMMIT_RETRIES:
                     raise
+                # exponential backoff + jitter (reference O5 shape,
+                # ddp lakefs handler:23-61)
                 time.sleep(_COMMIT_BACKOFF_BASE * (2**attempt) + _jitter())
+                continue
+            res = {**c.result, "version": version}
+            if c.auto_compact:
+                return self._dml_compacting(res, meta.configuration)
+            return res
         raise AssertionError("unreachable")
 
     def zorder(

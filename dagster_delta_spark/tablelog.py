@@ -793,8 +793,8 @@ def commit(
     Local-FS put-if-absent via ``open(..., 'x')``; on object stores this
     maps to a conditional PUT (S3 If-None-Match / ABFS etag), which is
     how open-source Delta commits on those stores too.  Raises
-    :class:`VersionConflictError` for the optimistic-retry loop in
-    ``table.py``.
+    :class:`VersionConflictError` for the single optimistic-retry loop,
+    ``DeltaSparkTable._commit`` in ``table.py``.
 
     GATE CONTRACT: the writer-protocol gate and the version-0 protocol
     stamp run ONLY when ``snapshot_after`` is provided.  Every
